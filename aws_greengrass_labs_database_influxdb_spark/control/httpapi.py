@@ -53,10 +53,14 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from pathlib import Path
 from urllib.parse import parse_qs, urlsplit
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import functions as F
 
 from ..frontends.annotated_csv import iter_annotated_csv
-from ..frontends.flux import execute_flux_multi
+from ..frontends.flux import (
+    SLOT_OF_FTYPE, _VALUE_RESULT_ALIASES, _tags_map_col, execute_flux_multi,
+)
 from ..frontends.influxql import execute_influxql, parse_influxql
 from ..sources.bucket import BucketMeta
 from ..sources.lineprotocol import parse_lines
@@ -250,157 +254,144 @@ def _iter_v1_json_chunked(results: list[dict], chunk_size: int):
             cur = nxt
 
 
+#: engine-internal columns no wire table carries
+_INTERNAL_COLS = (
+    "tags", "series_key", "time_ns", "ingest_seq", "_ts_raw", "ftype", "props",
+    "day", "f_int", "f_uint", "f_float", "f_str", "f_bool", "_start_ns",
+    "_stop_ns", "_rb_start_ns", "_rb_stop_ns",
+)
+#: the internal columns the reshaping reads: value slots, the datatype
+#: discriminator and the ns window bounds
+_FETCHED_INTERNAL = ("f_float", "f_str", "f_bool", "ftype", "_start_ns", "_stop_ns")
+
+
 def _fluxify_result(df):
-    """Rename engine-internal result columns to the Flux WIRE names a
-    stock client parses (``_measurement``/``_field``/``_value``/
-    ``_time``/``_start``/``_stop``) and materialize the ``tags`` map
-    as one column per tag key — the stock annotated-CSV shape (r8:
-    the facade leaked internal names like ``f_float``/``time_ns``/
-    ``series_key``, which no influxdb-client reader expects).
+    """Fetch one Flux result and reshape it into the tables a stock
+    client parses (r8: the facade leaked internal names like
+    ``f_float``/``time_ns``/``series_key``, which no influxdb-client
+    reader expects).
 
-    Column work only — the streaming shape of the CSV writer is
-    untouched. The tag-key discovery is one small distinct job bounded
-    by tag-KEY cardinality (not values).
+    The result reaches the driver with ONE Spark action,
+    ``DataFrame.toArrow()``; internal columns nothing reads are dropped
+    before it. Everything that depends on the data is then read from
+    those Arrow columns instead of from extra jobs: the tag keys (the
+    ``tags`` map, or the one parsed from ``series_key``, becomes one
+    column per key), the live value slot (renamed ``_value``) and the
+    datatype blocks. Engine names become the wire names
+    (``_measurement``/``_field``/``_time``/``_start``/``_stop``).
 
-    Returns a list of ``(df, wire_group_key)`` splits — one per result
-    datatype (usually a single entry). The key drives the stock
+    Returns a list of ``(table, wire_group_key)`` blocks — one per
+    result datatype (usually a single entry). The key drives the stock
     ``#group`` annotation and per-table numbering in the CSV; each
-    split gets its own annotation block (schema change = new header,
+    block gets its own annotation block (schema change = new header,
     per the annotated-CSV spec)."""
-    from pyspark.sql import functions as F
-
-    from ..frontends.flux import _VALUE_RESULT_ALIASES
-
-    tag_cols: list[str] = []
-    tags_map = None
-    if "tags" in df.columns:
-        tags_map = F.col("tags")
-    elif "series_key" in df.columns:
-        # aggregated frames carry the serialized key, not the map —
-        # recover the tag set from its middle |-segment
-        # (measurement|k=v,k=v|field, or measurement|k=v,… once the
-        # field segment was pivoted away)
-        tags_map = F.str_to_map(
-            F.split(F.col("series_key"), r"\|").getItem(1), F.lit(","), F.lit("=")
-        )
+    names = list(df.columns)
+    tags_map = _tags_map_col(df)
     if tags_map is not None:
         df = df.withColumn("_tags_m", tags_map)
-        keys = [
-            r[0]
-            for r in df.select(
-                F.explode(F.map_keys("_tags_m")).alias("k")
-            ).distinct().collect()
-        ]
-        for k in sorted(keys):
-            if k and k not in df.columns:
-                df = df.withColumn(k, F.col("_tags_m")[k])
-        df = df.drop("_tags_m")
-        tag_cols = [k for k in sorted(keys) if k and k in df.columns]
+        if "_tags_m" not in names:
+            names.append("_tags_m")
+    table = df.drop(*[
+        c for c in _INTERNAL_COLS if c in names and c not in _FETCHED_INTERNAL
+    ]).toArrow()
+    data = dict(zip(table.column_names, table.columns))
+
+    tag_cols: list[str] = []
+    if tags_map is not None:
+        m = data.pop("_tags_m")
+        entries = pa.list_(pa.field(
+            "entries", pa.struct([m.type.key_field, m.type.item_field]),
+            nullable=False,
+        ))
+        keys = sorted(
+            k for k in pc.unique(
+                pc.struct_field(pc.list_flatten(m.cast(entries)), "key")
+            ).to_pylist() if k
+        )
+        for k in keys:
+            if k not in names:
+                names.append(k)
+                data[k] = pc.map_lookup(m, pa.scalar(k, m.type.key_type), "first")
+        names.remove("_tags_m")
+        tag_cols = [k for k in keys if k in names]
     for src, dst in (("_start_ns", "_start"), ("_stop_ns", "_stop")):
-        if src in df.columns and dst not in df.columns:
-            df = df.withColumn(
-                dst, F.timestamp_micros(F.expr(f"`{src}` div 1000"))
-            )
+        if src in names and dst not in names:
+            names.append(dst)
+            # Spark's `div`: integer division truncating toward zero
+            data[dst] = pc.divide(data[src], 1000).cast(pa.timestamp("us", tz="UTC"))
+
     # the typed value slot → _value. unify_numeric_value guarantees an
     # f_float column on every frame (null for string/bool points), so a
     # fixed f_float-first preference silently discarded string/bool
     # field values (r9 ADVICE-high fix): pick the slot the frame's
     # ``ftype`` discriminator says is populated, and when a frame mixes
-    # datatypes, split it into one table per type (stock emits a fresh
-    # annotation block per schema — handled by the caller iterating the
-    # returned splits).
-    splits: list = []
-    if "_value" not in df.columns:
-        slots = [s for s in ("f_float", "f_str", "f_bool") if s in df.columns]
+    # datatypes, split it into one block per type (stock emits a fresh
+    # annotation block per schema).
+    blocks: list = [(None, None)]  # (row mask, column renamed to _value)
+    if "_value" not in names:
+        slots = [s for s in ("f_float", "f_str", "f_bool") if s in names]
         if len(slots) > 1:
-            # which slots actually hold data? ftype is authoritative
-            # (kept even on legitimately-null values, e.g. createEmpty
-            # spines); the distinct is bounded by the 5 field types.
-            slot_of = {"float": "f_float", "int": "f_float", "uint": "f_float",
-                       "string": "f_str", "bool": "f_bool"}
-            if "ftype" in df.columns:
-                ftypes = [
-                    r[0]
-                    for r in df.select("ftype").distinct().collect()
-                    if r[0] in slot_of
-                ]
-                live = sorted(
-                    {slot_of[t] for t in ftypes}, key=slots.index
-                )
-                if len(live) > 1:
-                    for slot in live:
-                        types = [t for t, s in slot_of.items() if s == slot]
-                        splits.append(
-                            (df.filter(F.col("ftype").isin(types))
-                               .withColumnRenamed(slot, "_value"),
-                             slot)
-                        )
-                else:
-                    df = df.withColumnRenamed(live[0] if live else "f_float",
-                                              "_value")
+            if "ftype" in names:
+                # ftype is authoritative (kept even on legitimately-null
+                # values, e.g. createEmpty spines)
+                ftypes = data["ftype"]
+                live = sorted({
+                    SLOT_OF_FTYPE[t] for t in pc.unique(ftypes).to_pylist()
+                    if t in SLOT_OF_FTYPE
+                }, key=slots.index)
+
+                def mask(slot):
+                    return pc.is_in(ftypes, value_set=pa.array(
+                        [t for t, s in SLOT_OF_FTYPE.items() if s == slot]))
             else:
-                # no discriminator: one columnar count job finds the
-                # populated slot(s); split on non-null as best effort.
-                counts = df.agg(
-                    *[F.count(F.col(s)).alias(s) for s in slots]
-                ).first()
-                live = [s for s in slots if counts[s] > 0]
-                if len(live) > 1:
-                    for slot in live:
-                        splits.append(
-                            (df.filter(F.col(slot).isNotNull())
-                               .withColumnRenamed(slot, "_value"),
-                             slot)
-                        )
-                else:
-                    df = df.withColumnRenamed(live[0] if live else "f_float",
-                                              "_value")
+                # no discriminator: split on non-null as best effort
+                live = [s for s in slots if data[s].null_count < len(data[s])]
+
+                def mask(slot):
+                    return pc.is_valid(data[slot])
+            if len(live) > 1:
+                blocks = [(mask(slot), slot) for slot in live]
+            else:
+                blocks = [(None, live[0] if live else "f_float")]
         elif slots:
-            df = df.withColumnRenamed(slots[0], "_value")
+            blocks = [(None, slots[0])]
         else:
-            hits = [c for c in df.columns if c in _VALUE_RESULT_ALIASES]
+            hits = [c for c in names if c in _VALUE_RESULT_ALIASES]
             if len(hits) == 1:
-                df = df.withColumnRenamed(hits[0], "_value")
-    def _finish(frame):
-        renames = {"measurement": "_measurement", "field": "_field",
-                   "time": "_time"}
-        for src, dst in renames.items():
-            if src in frame.columns and dst not in frame.columns:
-                frame = frame.withColumnRenamed(src, dst)
-        drop = [
-            c for c in ("tags", "series_key", "time_ns", "ingest_seq",
-                        "_ts_raw", "ftype", "props", "day", "f_int", "f_uint",
-                        "f_float", "f_str", "f_bool", "_start_ns", "_stop_ns",
-                        "_rb_start_ns", "_rb_stop_ns")
-            if c in frame.columns
-        ]
-        if drop:
-            frame = frame.drop(*drop)
+                blocks = [(None, hits[0])]
+
+    def _finish(mask, value_src):
+        out = {c: ("_value" if c == value_src else c) for c in names}
+        for src, dst in (("measurement", "_measurement"), ("field", "_field"),
+                         ("time", "_time")):
+            if src in out and dst not in out.values():
+                out[src] = dst
+        kept = [c for c in names if out[c] not in _INTERNAL_COLS]
+        frame = pa.Table.from_arrays([data[c] for c in kept],
+                                     names=[out[c] for c in kept])
+        if mask is not None:
+            frame = frame.filter(mask)
         # the wire GROUP KEY: what stock marks true in #group and numbers
         # tables by — measurement/tags/field/window bounds, never
         # _time/_value. Regrouped frames (group(columns:["host"]) dropped
         # series_key) keep their key as bare string columns — fold those
         # in too.
-        from pyspark.sql import types as T
-
         known = {"_measurement", "_field", "_start", "_stop", *tag_cols}
         extra = [
             f.name
-            for f in frame.schema.fields
-            if isinstance(f.dataType, T.StringType)
+            for f in frame.schema
+            if (pa.types.is_string(f.type) or pa.types.is_large_string(f.type))
             and not f.name.startswith("_")
             and f.name not in known
         ]
         wire_key = tuple(
             c for c in ("_measurement", *tag_cols, *extra, "_field",
                         "_start", "_stop")
-            if c in frame.columns
+            if c in frame.column_names
         )
         return frame, wire_key
 
-    if splits:
-        return [_finish(frame) for frame, _slot in splits]
-    return [_finish(df)]
+    return [_finish(mask, value_src) for mask, value_src in blocks]
 
 
 def _parse_delete_predicate(pred: str):
@@ -720,12 +711,15 @@ class HttpApi:
         handler.wfile.write(data)
 
     def _respond_chunks(self, handler, chunks, content_type="text/csv; charset=utf-8"):
-        """Chunked transfer encoding: facade memory stays O(chunk) no
-        matter how large the query result is.
+        """Chunked transfer encoding: the encoded body is written as it
+        is produced and never held whole.
 
-        The FIRST chunk is materialized before the status line goes
-        out, so plan-time and first-batch errors still surface as a
-        proper 400/500. An error after streaming began cannot change
+        The FIRST chunk is produced before the status line goes out, so
+        errors raised until then surface as a typed 4xx JSON error. For
+        a Flux query that covers planning and the fetch of its first
+        result (the annotated-CSV encoder runs on results already on
+        the driver); for InfluxQL it covers planning and the first row
+        batch. An error after streaming began cannot change
         the status — stock InfluxDB appends an annotated-CSV *error
         table* and terminates the chunk stream, and so do we (r8: the
         old path let the dispatcher write a second "HTTP/1.0 400"
@@ -981,11 +975,14 @@ class HttpApi:
         else:
             results = execute_flux_multi(points, text, group_key=gk)
 
-        # stream: chunked encoding over toLocalIterator — an
-        # un-aggregated range() over a big bucket never materializes
-        # in facade memory. Multi-yield scripts emit one CSV block per
-        # yield, each tagged with its result name and separated by an
-        # empty row (InfluxDB multi-result annotated-CSV framing).
+        # each result is fetched to the driver by one Spark action
+        # (toArrow, in _fluxify_result) and then encoded in chunks of
+        # at most 1,000 rows; the facade holds one whole result at a
+        # time, capped by spark.driver.maxResultSize. The first fetch
+        # runs before the status line, so its failure is a typed 4xx.
+        # Multi-yield scripts emit one CSV block per yield, each tagged
+        # with its result name and separated by an empty row (InfluxDB
+        # multi-result annotated-CSV framing).
         def _gen():
             for i, (name, df) in enumerate(results.items()):
                 if i:
@@ -994,11 +991,11 @@ class HttpApi:
                 # one result (shared table_ids dict); each split emits
                 # its own annotation block (schema changed).
                 table_ids: dict = {}
-                for j, (wire_df, wire_key) in enumerate(_fluxify_result(df)):
+                for j, (wire_table, wire_key) in enumerate(_fluxify_result(df)):
                     if j:
                         yield "\r\n"
                     yield from iter_annotated_csv(
-                        wire_df, group_key=wire_key, result_name=name,
+                        wire_table, group_key=wire_key, result_name=name,
                         annotations=annotations, header=csv_header,
                         table_ids=table_ids, delimiter=delimiter,
                         comment_prefix=comment_prefix,

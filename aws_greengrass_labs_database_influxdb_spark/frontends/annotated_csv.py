@@ -6,35 +6,44 @@ group key), ``#datatype``, ``#default`` — then the header and data rows,
 with a ``table`` index column numbering tables within the result
 (public InfluxDB 2.0 annotated-CSV spec).
 
-Serialization is the result-delivery edge, but it must not be a
-driver-memory bottleneck: an un-aggregated ``from() |> range()`` over a
-big bucket can be arbitrarily large. So the core is a *generator* over
-``toLocalIterator()`` — driver memory stays O(one partition); the
-group-key sort happens in Spark (``orderBy``), not driver-side. The
-string-returning wrapper remains for small dashboard responses.
+Memory contract: the encoder works on a result already on the driver
+as Arrow columns, fetched by one ``DataFrame.toArrow()`` — one Spark
+action per result, with no separate sort or count job. The driver
+therefore holds one whole result. Spark's ``spark.driver.maxResultSize``
+caps it, and an over-cap result fails during the fetch, before the
+facade sends a status line. Tables are ordered by group key on the
+driver, and the text is built and yielded in chunks of at most 1,000
+rows, so the encoded body never exists whole. The string-returning
+wrapper remains for small responses.
 """
 
 from __future__ import annotations
 
+import datetime as dt
+import math
 from collections.abc import Iterator
 
-from pyspark.sql import DataFrame, types as T
+import pyarrow as pa
+from pyspark.sql import DataFrame, Row, types as T
 
-_DTYPES = {
-    T.StringType(): "string",
-    T.DoubleType(): "double",
-    T.FloatType(): "double",
-    T.LongType(): "long",
-    T.IntegerType(): "long",
-    T.BooleanType(): "boolean",
-    T.TimestampType(): "dateTime:RFC3339",
-}
+#: data rows per yielded chunk
+_CHUNK_ROWS = 1000
 
 
-def _dtype(dt: T.DataType) -> str:
-    for k, v in _DTYPES.items():
-        if isinstance(dt, type(k)):
-            return v
+def _dtype(t: pa.DataType) -> str:
+    """The ``#datatype`` name of an Arrow column type. Spark's
+    TimestampType arrives tz-aware; TimestampNTZType, like every type
+    without a Flux counterpart, is a ``string`` column."""
+    if pa.types.is_string(t) or pa.types.is_large_string(t):
+        return "string"
+    if pa.types.is_floating(t):
+        return "double"
+    if pa.types.is_int64(t) or pa.types.is_int32(t):
+        return "long"
+    if pa.types.is_boolean(t):
+        return "boolean"
+    if pa.types.is_timestamp(t) and t.tz is not None:
+        return "dateTime:RFC3339"
     return "string"
 
 
@@ -43,7 +52,9 @@ def _fmt(v, delimiter: str = ",", datetime_format: str | None = None) -> str:
         return ""
     if isinstance(v, bool):
         return "true" if v else "false"
-    if hasattr(v, "isoformat"):  # datetime (tz-naive UTC micros)
+    if hasattr(v, "isoformat"):  # datetime: naive UTC, or tz-aware from Arrow
+        if isinstance(v, dt.datetime) and v.tzinfo is not None:
+            v = v.astimezone(dt.timezone.utc).replace(tzinfo=None)
         if datetime_format == "RFC3339":
             # stock Go time.Format(RFC3339): fractional seconds dropped
             return v.strftime("%Y-%m-%dT%H:%M:%S") + "Z"
@@ -61,8 +72,39 @@ def _fmt(v, delimiter: str = ",", datetime_format: str | None = None) -> str:
     return s
 
 
+def _row_value(v, t: pa.DataType):
+    """An Arrow cell as ``Row`` gives it: maps as dicts, structs as Rows."""
+    if v is None:
+        return None
+    if pa.types.is_map(t):
+        return {k: _row_value(x, t.item_type) for k, x in v}
+    if pa.types.is_struct(t):
+        return Row(**{f.name: _row_value(v[f.name], f.type) for f in t})
+    if pa.types.is_list(t) or pa.types.is_large_list(t):
+        return [_row_value(x, t.value_type) for x in v]
+    return v
+
+
+def _cells(col: pa.ChunkedArray) -> list:
+    vals = col.to_pylist()
+    if pa.types.is_nested(col.type):
+        vals = [_row_value(v, col.type) for v in vals]
+    return vals
+
+
+def _order_key(v):
+    """One cell's place in Spark's ascending order: nulls first, NaN
+    above every number. Python orders ``str`` by code point, which is
+    the UTF-8 byte order Spark compares strings in."""
+    if v is None:
+        return (0,)
+    if isinstance(v, float) and math.isnan(v):
+        return (2,)
+    return (1, v)
+
+
 def iter_annotated_csv(
-    df: DataFrame,
+    data: DataFrame | pa.Table,
     group_key: tuple[str, ...] = (),
     result_name: str = "_result",
     annotations: tuple[str, ...] = ("group", "datatype", "default"),
@@ -72,27 +114,29 @@ def iter_annotated_csv(
     comment_prefix: str = "#",
     datetime_format: str | None = None,
 ) -> Iterator[str]:
-    """Stream a result DataFrame as Flux annotated-CSV chunks.
+    """Encode a result as Flux annotated-CSV chunks.
 
-    Tables split on the group key; ``table`` numbers them in sorted
-    group-key order. The sort is a Spark job (``orderBy``); rows reach
-    the driver one partition at a time via ``toLocalIterator()`` — the
-    facade never holds the full result. ``annotations``/``header``/
+    ``data`` is a result already fetched as an Arrow table; a DataFrame
+    is fetched here with one ``toArrow()``. Rows are stably sorted by
+    ``group_key`` in Spark's ascending order, and ``table`` numbers the
+    distinct group-key values in that order (a null and the string
+    ``"None"`` are different keys). ``annotations``/``header``/
     ``delimiter``/``comment_prefix``/``datetime_format`` mirror the v2
-    dialect object (r6; delimiter/commentPrefix/dateTimeFormat r9):
-    annotation rows are emitted only when requested, cells join on the
-    dialect delimiter (values containing it get quoted), annotation
-    markers use the dialect comment prefix, and timestamps honor
-    RFC3339 (stock: fractional seconds dropped) vs RFC3339Nano
-    (fraction with trailing zeros trimmed). ``datetime_format=None``
-    keeps the engine's lossless isoformat (micros kept) for internal
-    round-trips. Pass a shared ``table_ids`` dict to continue table
-    numbering across multiple blocks of one result (datatype splits,
-    r9).
+    dialect object: annotation rows are emitted only when requested,
+    cells join on the dialect delimiter (values containing it get
+    quoted), annotation markers use the dialect comment prefix, and
+    timestamps honor RFC3339 (stock: fractional seconds dropped) vs
+    RFC3339Nano (fraction with trailing zeros trimmed).
+    ``datetime_format=None`` keeps the engine's lossless isoformat
+    (micros kept) for internal round-trips. Pass a shared ``table_ids``
+    dict to continue table numbering across multiple blocks of one
+    result (datatype splits). Data rows are yielded in chunks of at
+    most 1,000.
     """
+    table = data.toArrow() if isinstance(data, DataFrame) else data
     d, p = delimiter, comment_prefix
-    cols = df.columns
-    dtypes = [_dtype(f.dataType) for f in df.schema.fields]
+    cols = table.column_names
+    dtypes = [_dtype(f.type) for f in table.schema]
     head = ""
     if "group" in annotations:
         head += (
@@ -108,32 +152,35 @@ def iter_annotated_csv(
         head += d + "result" + d + "table" + d + d.join(cols) + "\r\n"
     if head:
         yield head
+    n = table.num_rows
+    keys = [()] * n
     if group_key:
-        df = df.orderBy(*group_key)
+        key_cols = [table.column(cols.index(k)).to_pylist() for k in group_key]
+        keys = [tuple(map(_order_key, vals)) for vals in zip(*key_cols)]
+        order = sorted(range(n), key=keys.__getitem__)
+        if order != list(range(n)):
+            table = table.take(order)
+            keys = [keys[i] for i in order]
     if table_ids is None:
         table_ids = {}
-    buf: list[str] = []
-    for r in df.toLocalIterator(prefetchPartitions=True):
-        key = tuple(str(r[k]) for k in group_key) if group_key else ()
-        tid = table_ids.setdefault(key, len(table_ids))
-        buf.append(
-            d + d + str(tid) + d
-            + d.join(_fmt(r[c], d, datetime_format) for c in cols) + "\r\n"
+    for off in range(0, n, _CHUNK_ROWS):
+        part = table.slice(off, _CHUNK_ROWS)
+        cells = [[_fmt(v, d, datetime_format) for v in _cells(c)] for c in part.columns]
+        rows = zip(*cells) if cells else [()] * part.num_rows
+        yield "".join(
+            d + d + str(table_ids.setdefault(key, len(table_ids))) + d
+            + d.join(row) + "\r\n"
+            for key, row in zip(keys[off:off + _CHUNK_ROWS], rows)
         )
-        if len(buf) >= 1000:
-            yield "".join(buf)
-            buf = []
-    if buf:
-        yield "".join(buf)
 
 
 def to_annotated_csv(
-    df: DataFrame,
+    data: DataFrame | pa.Table,
     group_key: tuple[str, ...] = (),
     result_name: str = "_result",
 ) -> str:
-    """Materialized convenience wrapper (small dashboard responses)."""
-    return "".join(iter_annotated_csv(df, group_key, result_name))
+    """Materialized convenience wrapper (small responses)."""
+    return "".join(iter_annotated_csv(data, group_key, result_name))
 
 
 def from_annotated_csv(spark, text: str) -> DataFrame:

@@ -334,6 +334,11 @@ _LIVE_SLOT_SUPERSET: "weakref.WeakKeyDictionary[DataFrame, list]" = (
 #: multi-stage mixed script runs ≤1 distinct probe)
 _PROBE_RUNS = 0
 
+#: value slot holding each field type (schema.unify_numeric_value folds
+#: every numeric type into the double f_float slot)
+SLOT_OF_FTYPE = {"float": "f_float", "int": "f_float", "uint": "f_float",
+                 "string": "f_str", "bool": "f_bool"}
+
 #: catalog class map per frame: {(measurement, field): type-class} —
 #: seeded from the bucket's _field_types.json by seed_live_slots and
 #: propagated alongside the live-slot caches; lets the group-collision
@@ -358,7 +363,10 @@ def _live_slots(df: DataFrame, exact: bool = True) -> list[str]:
     extra slots are float-only by construction. ``exact=False``
     additionally accepts a propagated SUPERSET entry (see
     ``_LIVE_SLOT_SUPERSET``) — callers whose semantics tolerate a
-    stale extra slot skip the probe job entirely."""
+    stale extra slot skip the probe job entirely. A float-only superset
+    answers exact callers too: the exact set is a subset of it, and the
+    probe itself answers ``["f_float"]`` for a frame with no typed rows,
+    so a catalog-numeric bucket never pays the typed-error probe."""
     if "ftype" not in df.columns:
         return ["f_float"]
     extra = [s for s in ("f_str", "f_bool") if s in df.columns]
@@ -367,16 +375,13 @@ def _live_slots(df: DataFrame, exact: bool = True) -> list[str]:
     hit = _LIVE_SLOT_CACHE.get(df)
     if hit is not None:
         return hit
-    if not exact:
-        sup = _LIVE_SLOT_SUPERSET.get(df)
-        if sup is not None:
-            return sup
+    sup = _LIVE_SLOT_SUPERSET.get(df)
+    if sup is not None and (not exact or sup == ["f_float"]):
+        return sup
     global _PROBE_RUNS
     _PROBE_RUNS += 1
-    slot_of = {"float": "f_float", "int": "f_float", "uint": "f_float",
-               "string": "f_str", "bool": "f_bool"}
     live = sorted({
-        slot_of.get(r[0], "f_float")
+        SLOT_OF_FTYPE.get(r[0], "f_float")
         for r in df.select("ftype").distinct().collect()
         if r[0] is not None
     }) or ["f_float"]
@@ -488,10 +493,8 @@ def _suffixed_live_slot(df: DataFrame, name: str) -> str:
     if sfx not in memo:
         global _PROBE_RUNS
         _PROBE_RUNS += 1
-        slot_of = {"float": "f_float", "int": "f_float", "uint": "f_float",
-                   "string": "f_str", "bool": "f_bool"}
         live = sorted({
-            slot_of.get(r[0], "f_float")
+            SLOT_OF_FTYPE.get(r[0], "f_float")
             for r in df.select(f"ftype{sfx}").distinct().collect()
             if r[0] is not None
         }) or ["f_float"]
@@ -512,11 +515,9 @@ def _typed_field_pivot(df: DataFrame, grouping, val: str):
     if not (val == "f_float" and "ftype" in df.columns
             and any(s in df.columns for s in ("f_str", "f_bool"))):
         return None
-    slot_of = {"float": "f_float", "int": "f_float", "uint": "f_float",
-               "string": "f_str", "bool": "f_bool"}
     fmap: dict = {}
     for r in df.select("field", "ftype").distinct().collect():
-        s = slot_of.get(r[1], "f_float")
+        s = SLOT_OF_FTYPE.get(r[1], "f_float")
         if s not in df.columns:
             s = "f_float"
         if r[0] not in fmap or s == "f_float":
@@ -673,9 +674,8 @@ def _narrow_catalog_on_filter(src: DataFrame, dst: DataFrame,
         # mirrors the seed_live_slots fix)
         return
     _CATALOG_CLASS_CACHE[dst] = narrowed
-    slot_of = {"float": "f_float", "string": "f_str", "bool": "f_bool"}
-    live = sorted({slot_of[c] for cls in narrowed.values() for c in cls
-                   if c in slot_of})
+    live = sorted({SLOT_OF_FTYPE[c] for cls in narrowed.values() for c in cls
+                   if c in SLOT_OF_FTYPE})
     live = [s for s in live if s in dst.columns]
     if not live:
         return  # no recognized classes: leave the probe to self-heal
@@ -697,9 +697,7 @@ def seed_live_slots(df: DataFrame, ftypes, exact: bool = False,
     class-map cache so ``group(columns:)`` collision checks on
     store-backed frames resolve from the pins with zero probe jobs
     (r14, r13 verdict #5)."""
-    slot_of = {"float": "f_float", "int": "f_float", "uint": "f_float",
-               "string": "f_str", "bool": "f_bool"}
-    live = sorted({slot_of[t] for t in ftypes if t in slot_of})
+    live = sorted({SLOT_OF_FTYPE[t] for t in ftypes if t in SLOT_OF_FTYPE})
     live = [s for s in live if s in df.columns]
     if not live:
         # NO recognized catalog types (deleted types file, incomplete
@@ -1188,9 +1186,6 @@ def _location_value(expr: str) -> str:
 
 AGG_STAGES = {"count", "sum", "mean", "median", "mode", "stddev", "spread", "skew"}
 
-#: stages whose INPUT must be numeric in stock Flux — over a
-#: string/bool series they raise the typed "unsupported input type"
-#: error instead of computing NULLs from the float slot (r11)
 #: stages that cannot change any surviving row's ftype — their output
 #: inherits the input's resolved live-slot set (see the propagation
 #: block at the stage-loop tail). Deliberately absent: map /
@@ -1212,6 +1207,11 @@ _ROW_REMOVING_STAGES = {
     "tail", "elapsed", "monitor.stateChanges",
 }
 
+#: stages whose INPUT must be numeric in stock Flux — over a
+#: string/bool series they raise the typed "unsupported input type"
+#: error instead of computing NULLs from the float slot (r11). Their
+#: output is float-only, so the stage-loop tail seeds its exact
+#: live-slot entry.
 _NUMERIC_INPUT_STAGES = {
     "quantile", "integral", "histogram", "histogramQuantile",
     "derivative", "difference", "increase", "cumulativeSum",
@@ -4031,6 +4031,12 @@ def _run_pipeline(
             _carry_slot_cache(_df_in, pipe.df,
                               demote=name in _ROW_REMOVING_STAGES,
                               carry_catalog=keeps_mf_names)
+        elif (name in _NUMERIC_INPUT_STAGES and "ftype" in pipe.df.columns
+              and _colname(_df_in, "_value") == "f_float"):
+            # the entry check proved the input's live set float-only
+            # and these stages emit floats: a downstream typed-error
+            # check (derivative() |> movingAverage()) runs no probe
+            _LIVE_SLOT_CACHE.setdefault(pipe.df, ["f_float"])
     return pipe
 
 

@@ -183,6 +183,18 @@ def test_annotated_csv_streams_in_bounded_chunks(spark):
     assert body == to_annotated_csv(df)
 
 
+def test_annotated_csv_null_and_none_string_are_separate_tables(spark):
+    """Table ids key on the raw group-key values: a null host and the
+    string "None" are two tables, the null one first (Spark's
+    nulls-first order)."""
+    df = spark.createDataFrame(
+        [("cpu", "None", 1.0), ("cpu", None, 2.0)],
+        "measurement string, host string, value double",
+    )
+    rows = to_annotated_csv(df, group_key=("measurement", "host")).splitlines()[4:]
+    assert rows == [",,0,cpu,,2.0", ",,1,cpu,None,1.0"]
+
+
 # ----------------------------------------------------------------- flux text
 
 from aws_greengrass_labs_database_influxdb_spark.frontends import FluxError, execute_flux  # noqa: E402

@@ -2778,3 +2778,93 @@ def test_catalog_seeded_live_slots_skip_probe(served):
         "catalog-seeded session must not run plan-time ftype probes "
         "for ordering consumers"
     )
+
+
+def test_flux_panels_run_only_the_result_fetch(served, monkeypatch):
+    """Grafana's Flux panels over a bucket of float and int fields run
+    no plan-time ftype probe, and every Spark job of the request
+    belongs to the one result fetch: the bucket catalog proves the
+    typed-error checks clean, and the tag keys, datatypes and table
+    order come from the fetched rows."""
+    from aws_greengrass_labs_database_influxdb_spark.control import httpapi as _h
+    from aws_greengrass_labs_database_influxdb_spark.frontends import flux as _fx
+
+    base, engine, tokens = served
+    sc = engine.spark.sparkContext
+    status, _ = _req(base, "/api/v2/buckets", "POST", token=tokens["Admin"],
+                     body={"name": "numeric-panels"})
+    assert status == 201
+    lines = "\n".join(
+        f"cpu,host=h{i % 3},region=r{i % 2} usage={i * 1.5},n={i}i"
+        f" {T0 + i * 10_000_000_000}"
+        for i in range(60)
+    )
+    status, _ = _req(base, "/api/v2/write?bucket=numeric-panels", "POST",
+                     token=tokens["Admin"], body=lines, ctype="text/plain")
+    assert status == 204
+
+    group = {}
+    dispatch, fluxify = HttpApi._dispatch, _h._fluxify_result
+
+    def grouped_dispatch(self, handler, method):
+        sc.setJobGroup(group["request"], "request")
+        try:
+            return dispatch(self, handler, method)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    def grouped_fluxify(df):
+        sc.setJobGroup(group["fetch"], "fetch")
+        try:
+            return fluxify(df)
+        finally:
+            sc.setJobGroup(group["request"], "request")
+
+    monkeypatch.setattr(HttpApi, "_dispatch", grouped_dispatch)
+    monkeypatch.setattr(_h, "_fluxify_result", grouped_fluxify)
+    rng = (' |> range(start: 2024-01-01T00:00:00Z, stop: 2024-01-01T01:00:00Z)'
+           ' |> filter(fn: (r) => r._measurement == "cpu"')
+    panels = {
+        "mean": rng + ' and r._field == "usage") |> aggregateWindow(every: 1m, fn: mean)',
+        "derivative": rng + ' and r._field == "usage" and r.host == "h1")'
+                            " |> derivative(unit: 1m, nonNegative: false)"
+                            " |> movingAverage(n: 5)",
+        "last": rng + ' and r.host == "h2") |> last()',
+    }
+    tracker = sc.statusTracker()
+    for name, stages in panels.items():
+        group.update(request=f"panel-{name}", fetch=f"panel-{name}-fetch")
+        probes = _fx._PROBE_RUNS
+        status, body = _req(base, "/api/v2/query", "POST", token=tokens["Admin"],
+                            body={"query": 'from(bucket: "numeric-panels")' + stages,
+                                  "type": "flux"})
+        assert status == 200 and ",_value," in body, name
+        assert _fx._PROBE_RUNS == probes, name
+        outside = tracker.getJobIdsForGroup(group["request"])
+        fetch = tracker.getJobIdsForGroup(group["fetch"])
+        assert fetch, name
+        assert len(outside) + len(fetch) <= len(fetch), (name, outside)
+
+
+def test_flux_execution_failure_is_typed_4xx(served):
+    """The first result is fetched before the status line, so a query
+    that fails while executing (toInt() over a non-numeric string)
+    answers a typed 400 JSON error, not a 200 carrying an error
+    table."""
+    base, _, tokens = served
+    t0 = T0 + 18_000_000_000_000  # own hour
+    status, _ = _req(base, "/api/v2/write?bucket=greengrass-telemetry", "POST",
+                     token=tokens["RW"], body=f'failcast,host=h1 code="abc" {t0}',
+                     ctype="text/plain")
+    assert status == 204
+    flux = ('from(bucket: "greengrass-telemetry")'
+            " |> range(start: 2024-01-01T00:00:00Z, stop: 2024-01-02T00:00:00Z)"
+            ' |> filter(fn: (r) => r._measurement == "failcast") |> toInt()')
+    with pytest.raises(urllib.error.HTTPError) as err:
+        _req(base, "/api/v2/query", "POST", token=tokens["RO"],
+             body={"query": flux, "type": "flux"})
+    assert err.value.code == 400
+    assert err.value.headers["Content-Type"] == "application/json"
+    doc = json.loads(err.value.read().decode())
+    assert doc["code"] == "invalid"
+    assert 'cannot convert string "abc" to int' in doc["message"]
